@@ -78,13 +78,7 @@ object Bench {
     val scaleDir = sys.env.get("SPARK_GRAFT_SCALE_DIR")
       .orElse(Some("/root/testdata/sf0.01"))
       .filter(d => d != sfDir && new java.io.File(d).isDirectory)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(cpus.toInt, "WARN")
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Warmup pass (JVM/codegen/broadcast warm; not timed).
     ordered.foreach { case (_, fn) =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One query, one fresh JVM: the isolation leg of the bench. Same-JVM
   * best-of-N minima still share JIT state, broadcast caches, and the
   * OS page cache across the whole catalog; [[Bench]] spawns this main
@@ -14,14 +12,7 @@ object IsoBench {
   def main(args: Array[String]): Unit = {
     val (sfDir, name) = (args(0), args(1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession(cpus.toInt, "ERROR")
     val fn = SparkEntry.queries(name)
     // one warmup (codegen/broadcast), then two timed runs
     try fn(spark, sfDir).count() catch { case _: Throwable => () }

@@ -6,10 +6,7 @@ import org.apache.spark.sql.functions._
 object JdbcProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[16]").config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession(16, "ERROR")
     def tTime[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[probe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r

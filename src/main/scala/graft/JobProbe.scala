@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one named catalog query (warm, then probed) and print
   * every Spark JOB it submits with wall-clock duration and stage
@@ -16,14 +15,7 @@ object JobProbe {
     val sfDir = args(0)
     val name = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession(cpus.toInt, "ERROR")
     val fn = SparkEntry.queries(name)
     try fn(spark, sfDir).count() catch { case _: Throwable => () } // warm
     case class J(id: Int, start: Long, var end: Long = -1L, var stages: Int = 0)

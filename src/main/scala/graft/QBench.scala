@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time a subset of the query catalog (warm run), for perf
   * iteration without the full bench. `runMain graft.QBench sfDir q...`.
@@ -9,13 +8,7 @@ object QBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession(cpus.toInt, "ERROR")
     names.foreach { n => try SparkEntry.queries(n)(spark, sfDir).count()
       catch { case e: Throwable => println(s"$n WARMUP FAIL: ${e.getMessage}") } }
     names.foreach { n =>

@@ -1,1162 +1,27 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{Similarity, Text}
-import graft.operators.{Compliance, Converters, Dedup, Multimodal, Retention, Sessionize}
+import graft.catalog.Gate
 
 /** Driver contract: one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the LLM-pipeline extensions), each with a DuckDB
   * oracle in `oracleSql` computing identical values with identical
-  * column names.
-  *
-  * Oracle-parity rules used throughout (see VERIFY notes):
-  *   - money/quantity aggregates go through exact DECIMAL arithmetic,
-  *     cast to DOUBLE only at the end (bit-identical in both engines);
-  *   - ratio columns are plain IEEE divisions of exact integers (never
-  *     rounded — identical inputs give identical doubles);
-  *   - every query output is deterministically ordered.
+  * column names. Both maps derive from the domain-grouped
+  * [[graft.catalog.Gate]] registry.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+  private val registry: Map[String, Gate] = Gate.registry(Gate.all)
 
-  /** Fixed 3-key store for q_rotating_aes (ids chosen non-contiguous
-    * to prove the id->key mapping, not just an index).
-    */
-  private val AesStore = graft.functions.RotatingAes.CredentialStore(Map(
-    1 -> Array.tabulate(16)(_.toByte),
-    7 -> Array.tabulate(16)(i => (255 - i).toByte),
-    23 -> "0123456789abcdef".getBytes("UTF-8")))
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, g) => n -> g.run }
 
-  private val dec18_2 = DecimalType(18, 2)
-  private val dec4_2 = DecimalType(4, 2)
-  private def decSumDouble(c: Column): Column = sum(c.cast(dec18_2)).cast("double")
-  /** l_extendedprice * (1 - l_discount) in exact decimal. */
-  private def discPrice: Column =
-    col("l_extendedprice").cast(dec18_2) * (lit(1).cast(dec4_2) - col("l_discount").cast(dec4_2))
-  private def charge: Column =
-    discPrice * (lit(1).cast(dec4_2) + col("l_tax").cast(dec4_2))
+  val oracleSql: Map[String, String] = registry.map { case (n, g) => n -> g.oracle }
 
   /** Flagship query on sf=0.001 (driver smoke-checks rows>0): revenue
     * per region/nation, broadcast dims, decimal-exact money.
     */
   def entry(spark: SparkSession): DataFrame =
     queries("q_join_revenue")(spark, "/root/testdata/sf0.001")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    OperatorGates.queries ++ OperatorGates.queries2 ++ OperatorGates3.queries3 ++
-      OperatorGates4.queries4 ++ OperatorGates5.queries5 ++
-      OperatorGates6.queries6 ++ OperatorGates7.queries7 ++
-      OperatorGates8.queries8 ++ OperatorGates9.queries9 ++
-      OperatorGates10.queries10 ++ OperatorGates11.queries11 ++
-      OperatorGates12.queries12 ++ OperatorGates13.queries13 ++
-      OperatorGates14.queries14 ++ OperatorGates15.queries15 ++
-      OperatorGates16.queries16 ++ OperatorGates17.queries17 ++
-      OperatorGates18.queries18 ++ Map(
-
-    // --- aggregation (pricing summary, TPC-H Q1 shape) ----------------
-    "q_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit(java.sql.Timestamp.valueOf("1996-12-01 00:00:00")))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          decSumDouble(col("l_quantity")).as("sum_qty"),
-          decSumDouble(col("l_extendedprice")).as("sum_base_price"),
-          sum(discPrice).cast("double").as("sum_disc_price"),
-          sum(charge).cast("double").as("sum_charge"),
-          (sum(col("l_quantity").cast(dec18_2)).cast("double") / count(lit(1))).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // --- converter chain: filter + field pick (AvroFilterConverter +
-    //     AvroFieldsPickConverter) -------------------------------------
-    "q_filter_pick" -> ((s, dir) => {
-      Converters.chain(
-        Converters.filterEquals("event_type", "click"),
-        Converters.pickFields("event_id", "user_id", "value"))(t(s, dir, "events"))
-        .orderBy(col("event_id"))
-    }),
-
-    // --- multi-way join with broadcast dims ---------------------------
-    "q_join_revenue" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(
-          sum(discPrice).cast("double").as("revenue"),
-          count(lit(1)).as("n_lines"))
-        .orderBy(col("r_name"), col("n_name"))
-    }),
-
-    // --- compaction delta-dedup ("largest delta wins", §2.4/§2.6) -----
-    "q_dedup_delta" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_quantity"))
-      // delta = full total order: (linenumber, partkey, quantity) — the
-      // synthetic data has duplicate (orderkey, linenumber) pairs, so a
-      // single delta column would leave the survivor ambiguous.
-      Dedup.keepMaxBy(li, Seq("l_orderkey"), Seq("l_linenumber", "l_partkey", "l_quantity"))
-        .orderBy(col("l_orderkey"))
-    }),
-
-    // --- exact dedup on key projection --------------------------------
-    "q_dedup_exact" -> ((s, dir) => {
-      Dedup.exactKeys(t(s, dir, "lineitem"), Seq("l_orderkey", "l_partkey", "l_suppkey"))
-        .orderBy(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-    }),
-
-    // --- retention: newest-k versions per dataset ---------------------
-    "q_retention_newest_k" -> ((s, dir) => {
-      Retention.newestK(t(s, dir, "orders"), Seq("o_custkey"),
-          Seq(col("o_orderdate"), col("o_orderkey")), 3)
-        .orderBy(col("o_custkey"), col("o_orderdate").desc, col("o_orderkey").desc)
-    }),
-
-    // --- compliance purge: broadcast anti-join ------------------------
-    "q_purge_antijoin" -> ((s, dir) => {
-      val purgeIds = t(s, dir, "orders")
-        .filter(col("o_orderstatus") === "F").select(col("o_orderkey"))
-      Compliance.purge(t(s, dir, "lineitem"), purgeIds, "l_orderkey", "o_orderkey")
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"), decSumDouble(col("l_quantity")).as("sum_qty"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // --- incremental watermark read (QueryBasedSource semantics) ------
-    // The watermark predicate is pushed on the source's NATIVE column —
-    // filtering a reconstructed timestamp column would sit above a
-    // projection and never reach the parquet scan. Encoding-aware:
-    // nanos long → ts_us > wm_us <=> ts_ns >= (wm_us + 1) * 1000 (exact);
-    // TIMESTAMP micros → strict > on a timestamp literal (micros-exact,
-    // and parquet pushes timestamp predicates).
-    "q_incremental_watermark" -> ((s, dir) => {
-      val wm = java.time.LocalDateTime.parse("2024-01-15T00:00:00")
-      val wmMicros = wm.toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      val pred = raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          col("ts") >= lit((wmMicros + 1) * 1000)
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          col("ts") > lit(wm) // NTZ compares against LocalDateTime
-        case _ =>
-          col("ts") > lit(java.sql.Timestamp.from(wm.toInstant(java.time.ZoneOffset.UTC)))
-      }
-      raw.filter(pred)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), decSumDouble(col("value")).as("sum_value"))
-        .orderBy(col("event_type"))
-    }),
-
-    // --- JSON-string parsing (JsonStringToJsonIntermediateConverter) --
-    "q_json_props" -> ((s, dir) => {
-      Converters.parseJson("props", StructType(Seq(StructField("k", LongType))))(
-        t(s, dir, "events"))
-        .groupBy(col("event_type"))
-        .agg(sum(col("k")).as("sum_k"), count(lit(1)).as("n"))
-        .orderBy(col("event_type"))
-    }),
-
-    // --- Avro container files (AvroFiles on avro-core): parquet ->
-    //     .avro part files -> read back -> aggregate; the oracle runs
-    //     the same aggregate on the parquet, so the gate proves the
-    //     roundtrip is value-exact incl. timestamps ---------------------
-    "q_avro_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_avro").toString + "/events"
-      val src = t(s, dir, "events")
-        .select(col("event_id"), col("event_type"), col("value"), col("ts"))
-      graft.sources.AvroFiles.write(src, tmp)
-      graft.sources.AvroFiles.read(s, tmp)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), decSumDouble(col("value")).as("sum_value"),
-          max(col("ts")).as("max_ts"))
-        .orderBy(col("event_type"))
-    }),
-
-    // --- schema handed to the engine as TEXT (the reference's schema
-    //     file form; JsonSchemaText parses the descriptor grammar) -----
-    "q_schema_text_json" -> ((s, dir) => {
-      val schema = graft.functions.JsonSchemaText.toStruct(
-        """[{"columnName": "k", "dataType": {"type": "long"}, "isNullable": true}]""")
-      Converters.parseJson("props", schema)(t(s, dir, "events"))
-        .groupBy(col("event_type"))
-        .agg(max(col("k")).as("max_k"), min(col("k")).as("min_k"),
-          count(col("k")).as("n_k"))
-        .orderBy(col("event_type"))
-    }),
-
-    // --- 1->N split (StringSplitterConverter -> explode) --------------
-    "q_wordcount" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(explode(Text.tokens(col("text"))).as("word"))
-        .groupBy(col("word")).agg(count(lit(1)).as("n"))
-        .orderBy(col("word"))
-    }),
-
-    // --- time-partitioned write key (TimeBasedWriterPartitioner) ------
-    "q_time_partitioned" -> ((s, dir) => {
-      Converters.withTimePartition("ts")(t(s, dir, "events"))
-        .groupBy(col("date_key"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"),
-          decSumDouble(col("value")).as("sum_value"))
-        .orderBy(col("date_key"))
-    }),
-
-    // --- fork operator: branch-tagged routing -------------------------
-    "q_fork_branches" -> ((s, dir) => {
-      Converters.forkTagged(t(s, dir, "events"), Seq(
-          "big" -> (col("value") >= 150),
-          "purchases" -> (col("event_type") === "purchase")))
-        .groupBy(col("branch"))
-        .agg(count(lit(1)).as("n"), decSumDouble(col("value")).as("sum_value"))
-        .orderBy(col("branch"))
-    }),
-
-    // --- deterministic limiter (CountBasedLimiter) --------------------
-    "q_limit_topk" -> ((s, dir) => {
-      Converters.limitBy(100, col("value").desc, col("event_id"))(t(s, dir, "events"))
-        .select(col("event_id"), col("value"))
-    }),
-
-    // --- sessionization (streaming-state analog, batch form) ----------
-    // --- streaming end-to-end (§2.8): a REAL Structured Streaming
-    //     query over the events table — file stream -> watermark ->
-    //     1h tumbling window agg -> append-mode parquet sink, run to
-    //     completion with Trigger.AvailableNow. Append mode emits
-    //     exactly the windows the final watermark (max event time,
-    //     0s delay, ms precision) has closed; the oracle replays that
-    //     cutoff in integer arithmetic. sum rides on floor(value*1000)
-    //     longs: order-independent, bit-exact cross-engine ------------
-    "q_stream_window_counts" -> ((s, dir) => {
-      import graft.streaming.StreamingIngest
-      StreamingIngest.withStatePartitions(s, 8) {
-      val src = s"$dir/events.parquet"
-      val rawSchema = s.read.parquet(src).schema // ts as nanos long
-      // the file-stream source wants a DIRECTORY to watch
-      val inDir = java.nio.file.Files.createTempDirectory("q_stream_in")
-      OperatorGates8.copyRaw(s, src, inDir, "events.parquet")
-      val stream = StreamingIngest.readFileStream(s, rawSchema, inDir.toString)
-        .withColumn("ts", expr(Tables.tsExpr(rawSchema("ts").dataType)))
-      val agg = stream
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(floor(col("value") * 1000).cast("long")).as("sum_v_milli"))
-        .select(col("window.start").as("window_start"), col("event_type"),
-          col("n"), col("sum_v_milli"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_wc").toString
-      StreamingIngest.runAvailableNow(agg, s"$tmp/data", s"$tmp/ck")
-      s.read.parquet(s"$tmp/data")
-        .orderBy(col("window_start"), col("event_type"))
-      }
-    }),
-
-    // --- streaming stateful dedup across micro-batches: the SAME
-    //     events file staged twice, maxFilesPerTrigger=1 so the copies
-    //     arrive in separate micro-batches, dropDuplicates state (TTL
-    //     via watermark) suppresses the replay — output is each event
-    //     exactly once. The streaming face of compaction dedup -------
-    "q_stream_dedup" -> ((s, dir) => {
-      import graft.streaming.StreamingIngest
-      StreamingIngest.withStatePartitions(s, 8) {
-      val src = s"$dir/events.parquet"
-      val rawSchema = s.read.parquet(src).schema
-      val inDir = java.nio.file.Files.createTempDirectory("q_stream_dd")
-      OperatorGates8.copyRaw(s, src, inDir, "a.parquet")
-      OperatorGates8.copyRaw(s, src, inDir, "b.parquet")
-      val stream = StreamingIngest
-        .readFileStream(s, rawSchema, inDir.toString, maxFilesPerTrigger = Some(1))
-        .withColumn("ts", expr(Tables.tsExpr(rawSchema("ts").dataType)))
-      val dd = StreamingIngest.streamingDedup(stream, "ts", "1 hour", Seq("event_id"))
-        .select(col("event_id"), col("event_type"),
-          floor(col("value") * 1000).cast("long").as("v_milli"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_dd_out").toString
-      StreamingIngest.runAvailableNow(dd, s"$tmp/data", s"$tmp/ck")
-      s.read.parquet(s"$tmp/data").orderBy(col("event_id"))
-      }
-    }),
-
-    // --- streaming custom keyed state (mapGroupsWithState): the same
-    //     events file twice in separate micro-batches; each key's
-    //     FINAL emission must carry the running count across batches
-    //     (= exactly 2x the per-user row count). foreachBatch appends
-    //     each batch's emissions with its batch id; the last emission
-    //     per key is the state proof ------------------------------------
-    "q_stream_running_totals" -> ((s, dir) => {
-      import graft.streaming.StreamingIngest
-      StreamingIngest.withStatePartitions(s, 8) {
-      val src = s"$dir/events.parquet"
-      val rawSchema = s.read.parquet(src).schema
-      val inDir = java.nio.file.Files.createTempDirectory("q_stream_rt")
-      OperatorGates8.copyRaw(s, src, inDir, "a.parquet")
-      OperatorGates8.copyRaw(s, src, inDir, "b.parquet")
-      val stream = StreamingIngest
-        .readFileStream(s, rawSchema, inDir.toString, maxFilesPerTrigger = Some(1))
-      val totals = StreamingIngest.runningTotals(stream, "user_id", "value")
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_rt_out").toString
-      val q = totals.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.withColumn("_batch", lit(id))
-            .write.mode("append").parquet(s"$tmp/data")
-        }
-        .option("checkpointLocation", s"$tmp/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("_batch").desc)
-      s.read.parquet(s"$tmp/data")
-        .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-        .select(col("user_id"), col("running_count"))
-        .orderBy(col("user_id"))
-      }
-    }),
-
-    // --- streaming sessionization (native session_window + watermark):
-    //     gap-merged per-user sessions; append mode emits exactly the
-    //     sessions CLOSED by the final watermark (end <= max event
-    //     time). Event times are ms-truncated on BOTH engines so the
-    //     watermark cutoff has no sub-ms edge --------------------------
-    "q_stream_sessions" -> ((s, dir) => {
-      import graft.streaming.StreamingIngest
-      StreamingIngest.withStatePartitions(s, 8) {
-      val src = s"$dir/events.parquet"
-      val rawSchema = s.read.parquet(src).schema
-      val inDir = java.nio.file.Files.createTempDirectory("q_stream_sess")
-      OperatorGates8.copyRaw(s, src, inDir, "events.parquet")
-      val stream = StreamingIngest.readFileStream(s, rawSchema, inDir.toString)
-        .withColumn("ts", expr(Tables.tsMillisExpr(rawSchema("ts").dataType)))
-      val agg = stream
-        .withWatermark("ts", "0 seconds")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n"),
-          sum(floor(col("value") * 1000).cast("long")).as("v_milli"))
-        .select(col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end"),
-          col("user_id"), col("n"), col("v_milli"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_sess_out").toString
-      StreamingIngest.runAvailableNow(agg, s"$tmp/data", s"$tmp/ck")
-      s.read.parquet(s"$tmp/data")
-        .orderBy(col("user_id"), col("session_start"))
-      }
-    }),
-
-    "q_sessionize" -> ((s, dir) => {
-      Sessionize.sessionize(t(s, dir, "events"), "user_id", "ts", "event_id",
-          gapMicros = 1800L * 1000 * 1000)
-        .orderBy(col("user_id"), col("session_id"))
-    }),
-
-    // --- deterministic sampling (SamplingConverter) -------------------
-    "q_sample" -> ((s, dir) => {
-      Converters.sampleDeterministic("event_id", 10)(t(s, dir, "events"))
-        .select(col("event_id"), col("event_type"), col("value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // --- deterministic train/val/test split ---------------------------
-    "q_train_split" -> ((s, dir) => {
-      graft.operators.Splits.split(t(s, dir, "documents"), "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("min_doc"))
-        .orderBy(col("split"))
-    }),
-
-    // --- per-group deterministic sampling -----------------------------
-    "q_group_sample" -> ((s, dir) => {
-      Converters.sampleKPerGroup(Seq("source"), "doc_id", k = 3)(t(s, dir, "documents"))
-        .select(col("source"), col("doc_id"), col("lang"))
-        .orderBy(col("source"), col("doc_id"))
-    }),
-
-    // --- text analysis: stats + quality scoring -----------------------
-    "q_text_stats" -> ((s, dir) => {
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        Text.charCount(col("text")).as("n_chars_computed"),
-        Text.tokenCount(col("text")).as("n_tokens"),
-        Text.bpeishTokenCount(col("text")).as("n_bpeish"),
-        Text.punctRatio(col("text")).as("punct_ratio"),
-        Text.stopwordRatio(col("text")).as("stopword_ratio"),
-        Text.qualityScore(col("text")).as("quality"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // --- language-ID heuristic ----------------------------------------
-    "q_lang_id" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(Text.langId(col("text")).as("lang_pred"))
-        .groupBy(col("lang_pred")).agg(count(lit(1)).as("n"))
-        .orderBy(col("lang_pred"))
-    }),
-
-    // --- rolling-hash fingerprints + content-defined chunking (custom
-    //     codegen expressions; rows-only — hash not SQL-reproducible) --
-    "q_rolling_fingerprint" -> ((s, dir) => {
-      import graft.functions.RollingHash
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        RollingHash.rollingHash64(col("text")).as("doc_hash"),
-        size(RollingHash.contentChunkHashes(col("text"), 16, 5)).as("n_chunks"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // --- document fingerprint + exact dedup ---------------------------
-    "q_fingerprint_dedup" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy(Text.fingerprint(col("text")).as("fingerprint"))
-        .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
-        .orderBy(col("fingerprint"))
-    }),
-
-    // --- exact n-gram Jaccard near-dup pairs (blocked, hot-shingle
-    //     cap). maxDocFreq=2 deliberately BITES at sf0.01 (max shingle
-    //     doc-freq there is 3) so the oracle — which replays the same
-    //     stopword-shingle cut in SQL — proves the capped semantics,
-    //     not just the uncapped happy path -----------------------------
-    "q_jaccard_pairs" -> ((s, dir) => {
-      Similarity.ngramJaccardPairs(t(s, dir, "documents"),
-          "doc_id", "text", "source", n = 3, threshold = 0.02, maxDocFreq = 2)
-        .orderBy(col("block"), col("id_a"), col("id_b"))
-    }),
-
-    // --- embedding cosine similarity above threshold ------------------
-    "q_cosine_pairs" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val probes = e.filter(pmod(col("vec_id"), lit(50)) === 0)
-      Similarity.similarPairs(probes, e, threshold = 0.2)
-        .orderBy(col("query_id"), col("neighbor_id"))
-    }),
-
-    // --- brute-force ANN top-k ----------------------------------------
-    "q_knn" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val probes = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-      Similarity.bruteForceTopK(probes, e, k = 5)
-        .orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
-    }),
-
-    // --- regex filter (StringFilterConverter) -------------------------
-    "q_regex_filter" -> ((s, dir) => {
-      Converters.regexFilter("text", "join .* merge")(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // --- CSV line parse round-trip (CsvToJsonConverterV2) -------------
-    "q_csv_parse" -> ((s, dir) => {
-      val lines = t(s, dir, "events")
-        .select(concat_ws("|", col("event_id"), col("event_type"), col("user_id")).as("line"))
-      Converters.splitDelimited("line", "|", Seq("id", "etype", "uid"))(lines)
-        .select(col("id").cast("long").as("id"), col("etype"), col("uid").cast("long").as("uid"))
-        .orderBy(col("id"))
-    }),
-
-    // --- grok log-line parsing (GrokToJsonConverter) ------------------
-    // --- envelope + binary Avro datums end-to-end: events encoded to
-    //     datums (AvroDatumEncode), framed in the Confluent wire
-    //     format, schema id parsed back, payloads decoded against the
-    //     registry (AvroDatumDecode) — the identity must survive the
-    //     full encode->frame->parse->decode path ----------------------
-    "q_envelope_avro" -> ((s, dir) => {
-      import graft.sources.AvroDatumEncode
-      import graft.streaming.Envelope
-      val ev = t(s, dir, "events")
-      val payloadType = StructType(Seq(
-        StructField("event_id", LongType, nullable = false),
-        StructField("event_type", StringType, nullable = false)))
-      val schemaJson = graft.sources.AvroFiles.avroSchema(payloadType).toString
-      val framed = ev.select(Envelope.encode(42,
-        AvroDatumEncode(
-          struct(col("event_id"), col("event_type")), Some(schemaJson))).as("envelope"))
-      Envelope.decodeAvro(framed, "envelope", Map(42 -> schemaJson))
-        .select(col("schema_id"),
-          col("decoded_42.event_id").as("event_id"),
-          col("decoded_42.event_type").as("event_type"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q_grok_parse" -> ((s, dir) => {
-      val logs = t(s, dir, "events").select(
-        col("event_id"),
-        concat(date_format(col("ts"), "yyyy-MM-dd"), lit(" "),
-          col("event_type"), lit(" [u"), col("user_id"), lit("]")).as("line"))
-      // the %{PATTERN:field:type} form exercises the Grok library end
-      // to end; the oracle's plain-regex extraction is value-identical
-      // (INT, not NONNEGINT: the latter's \b cannot match between the
-      // literal 'u' and a digit — both are word characters)
-      Converters.grok("line", "^%{NOTSPACE:day} %{NOTSPACE:etype} \\[u%{INT:uid:long}\\]$")(logs)
-        .groupBy(col("day"), col("etype"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("uid")).as("n_users"))
-        .orderBy(col("day"), col("etype"))
-    }),
-
-    // --- field-level crypto round-trip (crypto converters) ------------
-    "q_aes_roundtrip" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .withColumn("enc", expr("aes_encrypt(cast(text as binary), '0123456789abcdef')"))
-        .withColumn("text_rt", expr("cast(aes_decrypt(enc, '0123456789abcdef') as string)"))
-        .select(col("doc_id"), col("text_rt"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // --- key-rotating AES with a credential store (ref
-    //     RotatingAESCodec + JsonCredentialStore): encrypt each doc
-    //     under a deterministically rotated key in the reference wire
-    //     format, read the keyId back from the header, decrypt ---------
-    "q_rotating_aes" -> ((s, dir) => {
-      import graft.functions.RotatingAes
-      val docs = t(s, dir, "documents")
-      val kid = RotatingAes.pickKeyId(AesStore, col("doc_id"))
-      docs.withColumn("enc", RotatingAes.encrypt(col("text"), kid, AesStore))
-        .select(col("doc_id"),
-          RotatingAes.keyId(col("enc")).as("key_id"),
-          RotatingAes.decrypt(col("enc"), AesStore).cast("string").as("decrypted"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // --- skew-safe two-phase aggregation: event_type is a hot key
-    //     (6 values over the whole table); the salted partial spreads
-    //     each over 16 reducers, the final agg merges. Result must be
-    //     IDENTICAL to the plain group-by (the oracle) ----------------
-    "q_skew_agg" -> ((s, dir) => {
-      graft.operators.Skew.saltedAgg(
-          t(s, dir, "events"), keyCols = Seq("event_type"),
-          saltFrom = Seq("event_id"), buckets = 16,
-          partialAggs = Seq(count(lit(1)).as("_n"),
-            sum(floor(col("value") * 1000).cast("long")).as("_sv"),
-            min(col("event_id")).as("_mn")),
-          finalAggs = Seq(sum(col("_n")).as("n"),
-            sum(col("_sv")).as("sum_v_milli"),
-            min(col("_mn")).as("min_event_id")))
-        .orderBy(col("event_type"))
-    }),
-
-    // --- SQL surface: the SparkSessionExtensions-registered native
-    //     expressions driven through spark.sql (a reference user's
-    //     SQL-first entry point), not the Column API -------------------
-    "q_sql_surface" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
-      t(s, dir, "documents").createOrReplaceTempView("graft_documents")
-      s.sql("""SELECT doc_id, fnv64(text) AS text_fnv,
-              |  simhash_fnv64(text) AS text_simhash
-              |FROM graft_documents ORDER BY doc_id""".stripMargin)
-    }),
-
-    // --- rollup totals (extension beyond reference surface) -----------
-    "q_rollup_pricing" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(decSumDouble(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
-
-    // --- running window aggregation -----------------------------------
-    "q_window_running" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "orders")
-        .withColumn("running_spend",
-          sum(col("o_totalprice").cast(dec18_2)).over(w).cast("double"))
-        .select(col("o_custkey"), col("o_orderkey"), col("running_spend"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
-
-    // --- count-histogram range probing (SalesforceSource planning) ----
-    "q_histogram_probe" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("bucket"))
-    }),
-
-    // --- embedding column statistics ----------------------------------
-    "q_embedding_stats" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .withColumn("nrm", Similarity.norm(col("embedding")))
-      e.groupBy(col("label"))
-        .agg(count(lit(1)).as("n"),
-          min(col("nrm")).as("min_norm"), max(col("nrm")).as("max_norm"))
-        .orderBy(col("label"))
-    }),
-
-    // --- multimodal binary decode plumbing (stub decoder) -------------
-    "q_multimodal_features" -> ((s, dir) => {
-      val media = t(s, dir, "documents").select(
-        col("doc_id").as("media_id"), lit("text").as("modality"),
-        col("text").cast("binary").as("content"))
-      Multimodal.decodeFeatures(
-          Multimodal.repartitionForBytes(media, 1 << 20), Multimodal.FakeDecoder)
-        .toDF()
-        .select(col("media_id"), col("n_bytes"), col("byte_mean"), col("head_hex"))
-        .orderBy(col("media_id"))
-    }),
-
-    // --- as-of join: latest order at event time (composition path) ---
-    "q_asof_join" -> ((s, dir) => {
-      val e = t(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"))
-      val o = t(s, dir, "orders")
-      graft.operators.AsOfJoin.asOfLeft(e, o,
-          leftKey = "user_id", rightKey = "o_custkey",
-          leftTs = "ts", rightTs = "o_orderdate",
-          payload = Map("last_order_date" -> col("o_orderdate")))
-        .orderBy(col("event_id"))
-    }),
-
-    // --- interval/range join via bin compositing ----------------------
-    "q_range_join" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"),
-          // o_orderdate is TIMESTAMP_NTZ; cast is exact under the UTC session
-          unix_micros(col("o_orderdate").cast("timestamp")).as("od"))
-      val week = 7L * 24 * 3600 * 1000000
-      val points = o.select(col("o_orderkey").as("p_orderkey"), col("o_custkey").as("k"), col("od").as("p"))
-      val ranges = o.select(col("o_orderkey").as("r_orderkey"), col("o_custkey").as("k2"),
-        col("od").as("s"), (col("od") + week).as("e"))
-      graft.operators.RangeJoin.intervalJoin(points, ranges, "k", "k2", "p", "s", "e", week)
-        .filter(col("p_orderkey") =!= col("r_orderkey"))
-        .select(col("p_orderkey"), col("r_orderkey"))
-        .orderBy(col("p_orderkey"), col("r_orderkey"))
-    }),
-
-    // --- near-dup cluster resolution: pairs -> connected components ->
-    //     keep best-quality survivor per cluster ----------------------
-    "q_neardup_resolve" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .withColumn("fingerprint", Text.fingerprint(col("text")))
-        .withColumn("q", Text.qualityScore(col("text")))
-      // LINEAR pair construction (Dedup.starPairs): m-1 star edges per
-      // fingerprint group instead of the self-join's m(m-1)/2 complete
-      // graph — identical components, diameter 2 (one propagation round)
-      val pairs = graft.operators.Dedup.starPairs(docs, "fingerprint", "doc_id")
-      graft.operators.Dedup.resolveNearDups(docs, pairs, "doc_id", "q", "doc_id")
-        .select(col("doc_id"), col("fingerprint"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // --- ANN scale paths (rows-only; recall vs exact asserted in
-    //     AnnSpec against bruteForceTopK) ------------------------------
-    "q_ann_hyperplane_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val probes = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-      graft.functions.Ann.hyperplaneLsh(probes, e, k = 5)
-        .orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
-    }),
-    "q_ann_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val probes = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-      // sampled (md5-deterministic) coarse quantizer so the DuckDB
-      // oracle can replay it bit-for-bit; the KMeans-fitted variant
-      // (Ann.fitIvf) shares the identical search plan and keeps its
-      // recall gate in AnnSpec.
-      val idx = graft.functions.Ann.sampledIvf(e, k = 8)
-      idx.search(probes, e, k = 5, nProbe = 4)
-        .orderBy(col("query_id"), col("sim").desc, col("neighbor_id"))
-    }),
-
-    // --- embedding-cosine near-dup resolution: LSH candidates ->
-    //     threshold -> cluster -> keep min-id survivor (rows-only; the
-    //     LSH recall/cluster logic is spec-verified) -------------------
-    "q_embed_neardup_resolve" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val pairs = graft.functions.Ann.lshSimilarPairs(e, threshold = 0.5)
-        .select(col("id_a"), col("id_b"))
-      graft.operators.Dedup.resolveNearDups(
-          e.withColumn("neg_id", -col("vec_id")), pairs, "vec_id", "neg_id", "neg_id")
-        .select(col("vec_id"), col("label"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // --- multimodal frame sampling (counts oracle-checked) ------------
-    "q_frame_sample" -> ((s, dir) => {
-      val media = t(s, dir, "documents").select(
-        col("doc_id").as("media_id"), col("text").cast("binary").as("content"))
-      Multimodal.sampleFrames(media, frameBytes = 64, everyN = 3)
-        .toDF()
-        .select(col("media_id"), col("n_frames"), col("n_sampled"), col("sampled_bytes"))
-        .orderBy(col("media_id"))
-    }),
-
-    // --- MinHash + banded LSH near-dups (FNV shingle hash — the DuckDB
-    //     oracle replays signature generation end-to-end) --------------
-    "q_minhash_neardups" -> ((s, dir) => {
-      Similarity.minhashNearDups(t(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.25, shingleN = 3, numHashes = 16, bands = 4, fnv = true)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // --- incremental MinHash near-dup (ongoing-ingest face of
-    //     q_minhash_neardups): batch 1 = even docs dedups against
-    //     itself and its kept signatures become the LEDGER; batch 2 =
-    //     odd docs probes the ledger first (prior corpus wins), then
-    //     resolves within itself — no rescan of batch 1's text. The
-    //     oracle replays signatures, banding, both closures, and the
-    //     precedence ----------------------------------------------
-    "q_minhash_incremental" -> ((s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val b1 = docs.filter(col("doc_id") % 2 === 0)
-      val b2 = docs.filter(col("doc_id") % 2 === 1)
-      val empty = Seq.empty[(Long, Array[Long])].toDF("id", "sig")
-      val (r1, ledger) = Similarity.minhashIncremental(
-        b1, empty, "doc_id", "text", threshold = 0.25)
-      val (r2, _) = Similarity.minhashIncremental(
-        b2, ledger, "doc_id", "text", threshold = 0.25)
-      r1.withColumn("batch", lit(1)).unionByName(r2.withColumn("batch", lit(2)))
-        .select(col("batch"), col("id"), col("status"), col("matched_id"))
-        .orderBy(col("batch"), col("id"))
-    }),
-
-    // --- SimHash near-dup pairs: pigeonhole-banded equi-join (scale
-    //     path), FNV token hash (oracle replays it); the oracle is the
-    //     naive self-join, so the gate proves band-join == brute force -
-    "q_simhash_pairs" -> ((s, dir) => {
-      Similarity.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
-          blockCol = "source", maxHamming = 12)
-        .withColumnRenamed("block", "source")
-        .orderBy(col("source"), col("id_a"), col("id_b"))
-    })
-  )
-
-  def oracleSql: Map[String, String] =
-    OperatorGates.oracleSql ++ OperatorGates.oracleSql2 ++ OperatorGates3.oracleSql3 ++
-      OperatorGates4.oracleSql4 ++ OperatorGates5.oracleSql5 ++
-      OperatorGates6.oracleSql6 ++ OperatorGates7.oracleSql7 ++
-      OperatorGates8.oracleSql8 ++ OperatorGates9.oracleSql9 ++
-      OperatorGates10.oracleSql10 ++ OperatorGates11.oracleSql11 ++
-      OperatorGates12.oracleSql12 ++ OperatorGates13.oracleSql13 ++
-      OperatorGates14.oracleSql14 ++ OperatorGates15.oracleSql15 ++
-      OperatorGates16.oracleSql16 ++ OperatorGates17.oracleSql17 ++
-      OperatorGates18.oracleSql18 ++ Map(
-    "q_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))) * (CAST(1 AS DECIMAL(4,2)) + CAST(l_tax AS DECIMAL(4,2)))) AS DOUBLE) AS sum_charge,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1996-12-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_filter_pick" ->
-      """SELECT event_id, user_id, value FROM events
-        |WHERE event_type = 'click' ORDER BY event_id""".stripMargin,
-
-    "q_join_revenue" ->
-      """SELECT r_name, n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "q_dedup_delta" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity FROM lineitem
-        |QUALIFY row_number() OVER (PARTITION BY l_orderkey
-        |  ORDER BY l_linenumber DESC, l_partkey DESC, l_quantity DESC) = 1
-        |ORDER BY l_orderkey""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT DISTINCT l_orderkey, l_partkey, l_suppkey FROM lineitem
-        |ORDER BY l_orderkey, l_partkey, l_suppkey""".stripMargin,
-
-    "q_retention_newest_k" ->
-      """SELECT * FROM orders
-        |QUALIFY row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) <= 3
-        |ORDER BY o_custkey, o_orderdate DESC, o_orderkey DESC""".stripMargin,
-
-    "q_purge_antijoin" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey AND o_orderstatus = 'F')
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_incremental_watermark" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events WHERE ts > TIMESTAMP '2024-01-15 00:00:00'
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // DuckDB SUM(BIGINT) widens to HUGEINT/INT128 — cast the aggregate
-    // back to BIGINT so the driver's dtype-sensitive hash matches the
-    // Spark LongType sum (values were already identical).
-    "q_json_props" ->
-      """SELECT event_type,
-        |  CAST(SUM(CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_avro_roundtrip" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        |  MAX(ts) AS max_ts
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_schema_text_json" ->
-      """SELECT event_type,
-        |  CAST(MAX(CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT)) AS BIGINT) AS max_k,
-        |  CAST(MIN(CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT)) AS BIGINT) AS min_k,
-        |  COUNT(CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT)) AS n_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_wordcount" ->
-      """SELECT word, COUNT(*) AS n FROM (
-        |  SELECT unnest(string_split(text, ' ')) AS word FROM documents
-        |) WHERE len(word) > 0 GROUP BY word ORDER BY word""".stripMargin,
-
-    "q_time_partitioned" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS date_key,
-        |  COUNT(*) AS n_events,
-        |  COUNT(DISTINCT user_id) AS n_users,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_fork_branches" ->
-      """SELECT branch, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM (
-        |  SELECT 'big' AS branch, value FROM events WHERE value >= 150
-        |  UNION ALL
-        |  SELECT 'purchases' AS branch, value FROM events WHERE event_type = 'purchase'
-        |) GROUP BY branch ORDER BY branch""".stripMargin,
-
-    "q_limit_topk" ->
-      """SELECT event_id, value FROM events
-        |ORDER BY value DESC, event_id LIMIT 100""".stripMargin,
-
-    "q_stream_window_counts" ->
-      // the final watermark is max event time (ms precision, 0s
-      // delay); append mode emitted exactly the windows whose end <=
-      // that watermark. time_bucket is epoch-aligned like Spark's
-      // window(); the sum is over exact longs.
-      """WITH mx AS (
-        |  SELECT epoch_us(max(ts)) // 1000 AS max_ms FROM events
-        |), agg AS (
-        |  SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start,
-        |    event_type, COUNT(*) AS n,
-        |    CAST(SUM(CAST(floor(value * 1000) AS BIGINT)) AS BIGINT) AS sum_v_milli
-        |  FROM events GROUP BY 1, 2
-        |)
-        |SELECT window_start, event_type, n, sum_v_milli FROM agg, mx
-        |WHERE epoch_ms(CAST(window_start AS TIMESTAMP) + INTERVAL 1 HOUR) <= max_ms
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    "q_stream_running_totals" ->
-      // doubled input in two batches; final per-key state = 2x count
-      """SELECT user_id, COUNT(*) * 2 AS running_count
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_stream_sessions" ->
-      // gap sessionization replay: new session when the gap to the
-      // previous event is >= 30 min (session_window's [t, t+gap)
-      // overlap-merge boundary); end = last event + gap; append mode
-      // emitted exactly the sessions with end <= the final watermark
-      // (max ms-truncated event time, 0s delay)
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(ts) // 1000 AS ms,
-        |    CAST(floor(value * 1000) AS BIGINT) AS vm
-        |  FROM events
-        |), mx AS (
-        |  SELECT max(ms) AS max_ms FROM ev
-        |), brk AS (
-        |  SELECT user_id, ms, vm,
-        |    CASE WHEN lag(ms) OVER w IS NULL
-        |           OR ms - lag(ms) OVER w >= 1800000 THEN 1 ELSE 0 END AS b
-        |  FROM ev
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ms)
-        |), sess AS (
-        |  SELECT user_id, ms, vm,
-        |    SUM(b) OVER (PARTITION BY user_id ORDER BY ms
-        |                 ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM brk
-        |), agg AS (
-        |  SELECT user_id, sid, min(ms) AS start_ms, max(ms) + 1800000 AS end_ms,
-        |    COUNT(*) AS n, CAST(SUM(vm) AS BIGINT) AS v_milli
-        |  FROM sess GROUP BY user_id, sid
-        |)
-        |SELECT epoch_ms(start_ms) AS session_start, epoch_ms(end_ms) AS session_end,
-        |  user_id, n, v_milli
-        |FROM agg, mx WHERE end_ms <= max_ms
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    "q_stream_dedup" ->
-      // doubled input, exactly-once output: the oracle is one row per
-      // event (the input had no duplicate event_ids to begin with)
-      """SELECT event_id, event_type,
-        |  CAST(floor(value * 1000) AS BIGINT) AS v_milli
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH marked AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), sess AS (
-        |  SELECT user_id, ts,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM marked
-        |)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |  MIN(ts) AS session_start, MAX(ts) AS session_end, COUNT(*) AS n_events
-        |FROM sess GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-
-    "q_sample" ->
-      """SELECT event_id, event_type, value FROM events
-        |WHERE event_id % 10 = 0 ORDER BY event_id""".stripMargin,
-
-    "q_train_split" ->
-      """WITH assigned AS (
-        |  SELECT doc_id,
-        |    CASE WHEN substring(md5('graft' || '|' || doc_id), 1, 4) < 'cccd' THEN 'train'
-        |         WHEN substring(md5('graft' || '|' || doc_id), 1, 4) < 'e666' THEN 'val'
-        |         ELSE 'test' END AS split
-        |  FROM documents
-        |)
-        |SELECT split, COUNT(*) AS n, MIN(doc_id) AS min_doc
-        |FROM assigned GROUP BY split ORDER BY split""".stripMargin,
-
-    "q_group_sample" ->
-      """SELECT source, doc_id, lang FROM documents
-        |QUALIFY row_number() OVER (PARTITION BY source
-        |  ORDER BY md5('graft' || '|' || doc_id), doc_id) <= 3
-        |ORDER BY source, doc_id""".stripMargin,
-
-    "q_text_stats" ->
-      """SELECT doc_id,
-        |  length(text) AS n_chars_computed,
-        |  len(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS n_tokens,
-        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS n_bpeish,
-        |  CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(len(list_filter(string_split(text, ' '), x -> x IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-        |    / CAST(greatest(len(list_filter(string_split(text, ' '), x -> len(x) > 0)), 1) AS DOUBLE) AS stopword_ratio,
-        |  (CASE WHEN len(list_filter(string_split(text, ' '), x -> len(x) > 0)) BETWEEN 20 AND 10000 THEN 0.5 ELSE 0.0 END
-        |   + CASE WHEN (CAST(len(list_filter(string_split(text, ' '), x -> x IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-        |       / CAST(greatest(len(list_filter(string_split(text, ' '), x -> len(x) > 0)), 1) AS DOUBLE)) > 0.0 THEN 0.3 ELSE 0.0 END)
-        |   + CASE WHEN (CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE)) < 0.1 THEN 0.2 ELSE 0.0 END AS quality
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_lang_id" ->
-      """WITH scores AS (
-        |  SELECT
-        |    len(list_filter(string_split(text, ' '), x -> x IN ('the','and','of','to','is'))) AS s_en,
-        |    len(list_filter(string_split(text, ' '), x -> x IN ('der','und','die','das','ist'))) AS s_de,
-        |    len(list_filter(string_split(text, ' '), x -> x IN ('le','la','et','les','est'))) AS s_fr,
-        |    len(list_filter(string_split(text, ' '), x -> x IN ('el','de','que','los','es'))) AS s_es
-        |  FROM documents
-        |), pred AS (
-        |  SELECT CASE
-        |    WHEN s_en > 0 AND s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-        |    WHEN s_de > 0 AND s_de >= s_fr AND s_de >= s_es THEN 'de'
-        |    WHEN s_fr > 0 AND s_fr >= s_es THEN 'fr'
-        |    WHEN s_es > 0 THEN 'es'
-        |    ELSE 'und' END AS lang_pred
-        |  FROM scores
-        |)
-        |SELECT lang_pred, COUNT(*) AS n FROM pred
-        |GROUP BY lang_pred ORDER BY lang_pred""".stripMargin,
-
-    "q_fingerprint_dedup" ->
-      """SELECT md5(text) AS fingerprint, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // capped-set Jaccard: shingles with block doc-freq > 2 are removed
-    // from the sets (intersection AND union) — replays ngramJaccardPairs
-    // maxDocFreq=2 exactly, via the naive exploded self-join
-    "q_jaccard_pairs" ->
-      """WITH docsh AS (
-        |  SELECT doc_id, source AS block,
-        |    unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |      THEN list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-        |      ELSE [] END)) AS s
-        |  FROM (
-        |    SELECT doc_id, source,
-        |      list_filter(string_split(text, ' '), x -> len(x) > 0) AS toks
-        |    FROM documents
-        |  )
-        |), kept AS (
-        |  SELECT * FROM docsh
-        |  QUALIFY COUNT(*) OVER (PARTITION BY block, s) <= 2
-        |), sizes AS (
-        |  SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id
-        |), inter AS (
-        |  SELECT a.block, a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        |  FROM kept a JOIN kept b ON a.block = b.block AND a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2, 3
-        |)
-        |SELECT i.block AS block, i.id_a, i.id_b,
-        |  CAST(i.inter AS DOUBLE) / CAST(greatest(sa.n_sh + sb.n_sh - i.inter, 1) AS DOUBLE) AS jaccard
-        |FROM inter i
-        |JOIN sizes sa ON i.id_a = sa.doc_id
-        |JOIN sizes sb ON i.id_b = sb.doc_id
-        |WHERE CAST(i.inter AS DOUBLE) / CAST(greatest(sa.n_sh + sb.n_sh - i.inter, 1) AS DOUBLE) >= 0.02
-        |ORDER BY block, id_a, id_b""".stripMargin,
-
-    "q_cosine_pairs" ->
-      """SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |  list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-        |    / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-        |       * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))) AS sim
-        |FROM embeddings a JOIN embeddings b ON a.vec_id % 50 = 0 AND a.vec_id <> b.vec_id
-        |WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-        |    / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-        |       * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))) >= 0.2
-        |ORDER BY query_id, neighbor_id""".stripMargin,
-
-    "q_asof_join" ->
-      """SELECT e.event_id, e.user_id, e.ts, o.o_orderdate AS last_order_date
-        |FROM events e ASOF LEFT JOIN orders o
-        |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q_range_join" ->
-      """SELECT a.o_orderkey AS p_orderkey, b.o_orderkey AS r_orderkey
-        |FROM orders a JOIN orders b ON a.o_custkey = b.o_custkey
-        |  AND a.o_orderdate >= b.o_orderdate
-        |  AND a.o_orderdate < b.o_orderdate + INTERVAL 7 DAY
-        |  AND a.o_orderkey <> b.o_orderkey
-        |ORDER BY p_orderkey, r_orderkey""".stripMargin,
-
-    "q_neardup_resolve" ->
-      """SELECT doc_id, md5(text) AS fingerprint FROM documents
-        |QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id DESC) = 1
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_regex_filter" ->
-      """SELECT doc_id, n_chars FROM documents
-        |WHERE regexp_matches(text, 'join .* merge') ORDER BY doc_id""".stripMargin,
-
-    "q_csv_parse" ->
-      """SELECT CAST(parts[1] AS BIGINT) AS id, parts[2] AS etype, CAST(parts[3] AS BIGINT) AS uid
-        |FROM (SELECT string_split(event_id || '|' || event_type || '|' || user_id, '|') AS parts FROM events)
-        |ORDER BY id""".stripMargin,
-
-    "q_envelope_avro" ->
-      // encode->frame->parse->decode is the identity on the payload
-      """SELECT CAST(42 AS INT) AS schema_id, event_id, event_type
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_grok_parse" ->
-      """WITH parsed AS (
-        |  SELECT
-        |    regexp_extract(line, '^(\S+) (\S+) \[u(\d+)\]$', 1) AS day,
-        |    regexp_extract(line, '^(\S+) (\S+) \[u(\d+)\]$', 2) AS etype,
-        |    CAST(regexp_extract(line, '^(\S+) (\S+) \[u(\d+)\]$', 3) AS BIGINT) AS uid
-        |  FROM (SELECT strftime(ts, '%Y-%m-%d') || ' ' || event_type || ' [u' || user_id || ']' AS line FROM events)
-        |)
-        |SELECT day, etype, COUNT(*) AS n, COUNT(DISTINCT uid) AS n_users
-        |FROM parsed GROUP BY day, etype ORDER BY day, etype""".stripMargin,
-
-    "q_aes_roundtrip" ->
-      "SELECT doc_id, text AS text_rt FROM documents ORDER BY doc_id",
-
-    "q_rotating_aes" -> OracleSql.rotatingAes(keyIds = Seq(1, 7, 23)),
-
-    "q_sql_surface" -> OracleSql.sqlSurface,
-
-    "q_skew_agg" ->
-      // the salted two-phase agg must equal the plain group-by
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(floor(value * 1000) AS BIGINT)) AS BIGINT) AS sum_v_milli,
-        |  MIN(event_id) AS min_event_id
-        |FROM events GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "q_rollup_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_spend
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_histogram_probe" ->
-      """SELECT strftime(o_orderdate, '%Y-%m') AS bucket, COUNT(*) AS n
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_embedding_stats" ->
-      """SELECT label, COUNT(*) AS n,
-        |  MIN(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))) AS min_norm,
-        |  MAX(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))) AS max_norm
-        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin,
-
-    "q_frame_sample" ->
-      """WITH m AS (
-        |  SELECT doc_id AS media_id, octet_length(encode(text)) AS len FROM documents
-        |), f AS (
-        |  SELECT media_id, len,
-        |    (len + 63) // 64 AS n_frames,
-        |    ((len + 63) // 64 + 2) // 3 AS n_sampled,
-        |    CASE WHEN len % 64 = 0 THEN 64 ELSE len % 64 END AS last_len
-        |  FROM m
-        |)
-        |SELECT media_id, CAST(n_frames AS BIGINT) AS n_frames,
-        |  CAST(n_sampled AS BIGINT) AS n_sampled,
-        |  CAST(n_sampled * 64 - CASE WHEN (n_frames - 1) % 3 = 0 THEN 64 - last_len ELSE 0 END AS BIGINT) AS sampled_bytes
-        |FROM f ORDER BY media_id""".stripMargin,
-
-    "q_multimodal_features" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  CAST(list_sum(list_transform(range(1, length(text) + 1), i -> unicode(substring(text, i, 1)))) AS DOUBLE)
-        |    / octet_length(encode(text)) AS byte_mean,
-        |  hex(encode(substring(text, 1, 4))) AS head_hex
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "q_knn" ->
-      """WITH scored AS (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))) AS sim
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id % 100 = 0 AND a.vec_id <> b.vec_id
-        |)
-        |SELECT query_id, neighbor_id, sim FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5
-        |ORDER BY query_id, sim DESC, neighbor_id""".stripMargin,
-
-    // Hash-heavy queries: the DuckDB SQL replays the exact FNV /
-    // polynomial / sign-bit arithmetic (builders in OracleSql.scala).
-    "q_simhash_pairs" -> OracleSql.simhashPairs(maxHamming = 12),
-    "q_minhash_neardups" -> OracleSql.minhashNearDups(threshold = 0.25, numHashes = 16, bands = 4),
-    "q_minhash_incremental" -> OracleSql.minhashIncremental(threshold = 0.25, numHashes = 16, bands = 4),
-    "q_rolling_fingerprint" -> OracleSql.rollingFingerprint(window = 16, maskBits = 5),
-    "q_ann_hyperplane_lsh" -> OracleSql.annHyperplaneLsh(k = 5, probeMod = 100),
-    "q_embed_neardup_resolve" -> OracleSql.embedNeardupResolve(threshold = 0.5),
-    "q_ann_ivf" -> OracleSql.annIvf(k = 5, nProbe = 4, nCentroids = 8, probeMod = 100)
-  )
 }

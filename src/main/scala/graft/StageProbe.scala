@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one named catalog query (warm, then timed) and print
   * its job/stage/task/shuffle profile — the evidence a "query X got
@@ -19,14 +18,7 @@ object StageProbe {
     val name = args(1)
     val prewarm = args.drop(2).headOption.map(_.toInt).getOrElse(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession(cpus.toInt, "ERROR")
     SparkEntry.queries.keys.toSeq.sorted.take(prewarm).foreach { q =>
       try SparkEntry.queries(q)(spark, sfDir).count()
       catch { case _: Throwable => () }

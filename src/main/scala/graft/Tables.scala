@@ -37,6 +37,21 @@ object Tables {
     // scale-adaptive in both directions, not a local-core-count tune
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
+  /** The local session every main and test suite runs on: `cores`
+    * threads and as many shuffle partitions, no UI, [[sessionConfigs]],
+    * and the given root log level.
+    */
+  def localSession(cores: Int, logLevel: String): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+    sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     val withTs =

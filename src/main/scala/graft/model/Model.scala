@@ -1,51 +1,14 @@
 package graft.model
 
-/** Core job/data model, re-expressed for Spark from the reference's
+/* Core job/data model, re-expressed for Spark from the reference's
   * Source/WorkUnit/State abstractions:
-  *   - Extract table types: reference
-  *     gobblin-api/.../source/workunit/Extract.java:51-56
   *   - Watermarks: gobblin-api/.../source/extractor/Watermark.java,
   *     LongWatermark / MultiLongWatermark
   *     (gobblin-modules/gobblin-kafka-common/.../kafka/MultiLongWatermark.java)
-  *   - Extract types (snapshot/append):
-  *     gobblin-core/.../extract/ExtractType.java:23-27
   *
   * In the Spark re-design a "WorkUnit" collapses into a read-spec the
   * driver computes from the state store; Spark owns task distribution.
   */
-sealed trait TableType
-object TableType {
-  case object SnapshotOnly extends TableType
-  case object SnapshotAppend extends TableType
-  case object AppendOnly extends TableType
-
-  /** Spark write-mode equivalent of the reference's table types. */
-  def writeMode(t: TableType): String = t match {
-    case SnapshotOnly => "overwrite"
-    case SnapshotAppend | AppendOnly => "append"
-  }
-}
-
-/** Job-level commit policies (gobblin-core-base/.../JobCommitPolicy
-  * .java:31-54). FULL publishes only if every branch staged
-  * successfully (Publisher.publishAll); PARTIAL publishes whatever
-  * staged (Publisher.publishPartial); SUCCESSFUL_TASKS maps to
-  * per-dataset jobs, each committing independently.
-  */
-sealed trait CommitPolicy
-object CommitPolicy {
-  case object CommitOnFullSuccess extends CommitPolicy
-  case object CommitOnPartialSuccess extends CommitPolicy
-  case object CommitSuccessfulTasks extends CommitPolicy
-}
-
-sealed trait ExtractType
-object ExtractType {
-  case object Snapshot extends ExtractType
-  case object AppendDaily extends ExtractType
-  case object AppendHourly extends ExtractType
-  case object AppendBatch extends ExtractType
-}
 
 /** Monotonic progress marker; serialized into the JSON state store. */
 sealed trait Watermark {
@@ -80,20 +43,4 @@ object Watermark {
   * (gobblin-api/.../Constructs.java:33-47) with one Spark action per
   * dataset/branch.
   */
-final case class JobSpec(
-    name: String,
-    namespace: String = "graft",
-    tableType: TableType = TableType.AppendOnly,
-    extractType: ExtractType = ExtractType.Snapshot)
-
-/** Working-state of one run, mirroring WorkUnitState.WorkingState
-  * (gobblin-api/.../WorkUnitState.java:57-78).
-  */
-sealed trait RunState
-object RunState {
-  case object Pending extends RunState
-  case object Running extends RunState
-  case object Successful extends RunState
-  case object Failed extends RunState
-  case object Committed extends RunState
-}
+final case class JobSpec(name: String)

@@ -626,17 +626,7 @@ object JobConfig {
           partCol = "shard",
           touchedCol = Some(graft.operators.Bm25.shardOf(col(idCol), nShards))) {
           (table, hasCurrent, delta, pre) =>
-            // a doc can be updated MORE THAN ONCE inside one delta;
-            // the merge treats every delta row as current, so reduce
-            // to the latest version per doc by seq first (ties: any —
-            // equal seq means equal version under the watermark
-            // contract). Same latest-wins discipline as Scd2.merge.
-            val latest = delta
-              .withColumn("_rn", row_number().over(
-                org.apache.spark.sql.expressions.Window
-                  .partitionBy(col(idCol))
-                  .orderBy(col(seqCol).cast("long").desc)))
-              .filter(col("_rn") === 1).drop("_rn")
+            val latest = latestPerKey(delta, idCol, seqCol)
             val (merged, touched) = graft.operators.Bm25.shardedMerge(table,
               hasCurrent, latest, idCol, textCol, nShards,
               precomputedTouched = pre,
@@ -735,12 +725,7 @@ object JobConfig {
           }) { (table, hasCurrent, delta, _) =>
           // touched = IVF list ids, known only after assignment
           // against the codebook — no row-wise touchedCol exists
-          val latest = delta
-            .withColumn("_rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col(aId))
-                .orderBy(col(aSeq).cast("long").desc)))
-            .filter(col("_rn") === 1).drop("_rn")
+          val latest = latestPerKey(delta, aId, aSeq)
           val idx =
             if (hasCurrent)
               graft.operators.AnnIndex.loadCodebook(req(p, "sink.output"), aConf)
@@ -1109,6 +1094,21 @@ object JobConfig {
 
       case other => throw new IllegalArgumentException(s"unknown job.type: $other")
     }
+
+  /** Latest row per `idCol` by `seqCol` (ties: any — equal seq means
+    * equal version under the watermark contract). A key can change
+    * more than once inside one delta, and the replacing merges of the
+    * index and annindex jobs treat every delta row as current. Same
+    * latest-wins discipline as Scd2.merge; the additive rollup and
+    * classify merges must not use it.
+    */
+  private def latestPerKey(delta: DataFrame, idCol: String, seqCol: String): DataFrame =
+    delta
+      .withColumn("_rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col(idCol))
+          .orderBy(col(seqCol).cast("long").desc)))
+      .filter(col("_rn") === 1).drop("_rn")
 
   /** Shared engine for the watermarked incremental-maintenance job
     * types (scd2 = dimension, rollup = cube, funnel = sequence

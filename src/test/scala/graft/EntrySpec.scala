@@ -1,7 +1,9 @@
 package graft
 
+import graft.catalog.Gate
+
 /** Driver-contract smoke: entry() returns rows; every declared query
-  * runs at sf0.001 and every oracle key exists in queries.
+  * runs at sf0.001; gate names are unique and every gate has an oracle.
   */
 class EntrySpec extends SparkSpec {
 
@@ -16,8 +18,13 @@ class EntrySpec extends SparkSpec {
     }
   }
 
-  test("oracle keys are a subset of query keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
+  test("gate names are unique and every oracle is non-empty") {
+    val gates = Gate.all
+    assert(gates.map(_.name).distinct.size == gates.size)
+    assert(SparkEntry.queries.size == gates.size)
+    val blank = gates.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"gates without oracle SQL: $blank")
+    val e = intercept[IllegalArgumentException](Gate.registry(gates :+ gates.head))
+    assert(e.getMessage.contains(gates.head.name))
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 import graft.functions.Text
-import graft.model.{CommitPolicy, TableType}
 import graft.sink.{Publisher, SinkSpec}
 
 /** Small operators not covered by the bigger suites. */
@@ -82,12 +81,6 @@ class SmallOpsSpec extends SparkSpec {
     assert(r.getDouble(0) == 2.5)  // (6 chars - 2 tokens + 1) / 2
     assert(r.getLong(1) != 0L)
     assert(r.getInt(2) == 3)       // "ab", "cd", "!"
-  }
-
-  test("table types map to write modes; commit policies exist") {
-    assert(TableType.writeMode(TableType.SnapshotOnly) == "overwrite")
-    assert(TableType.writeMode(TableType.AppendOnly) == "append")
-    assert(CommitPolicy.CommitOnFullSuccess != CommitPolicy.CommitOnPartialSuccess)
   }
 
   test("publishPartial publishes staged branches, reports missing ones") {

@@ -21,7 +21,7 @@ class ThreadAssemblySpec extends SparkSpec {
     val inDir = java.nio.file.Files.createTempDirectory("thread_spec")
     val now = System.currentTimeMillis()
     batches.zipWithIndex.foreach { case (rows, i) =>
-      graft.OperatorGates8.stageFile(
+      graft.catalog.Fixtures.stageFile(
         rows.map { case (u, ms, id, r, x) => (u, ts(Base + ms), Base + ms, id, r, x) }
           .toDF("user_id", "ts", "ms", "event_id", "role", "text"),
         inDir, s"b$i.parquet", now - 60000L * (batches.size - i))
